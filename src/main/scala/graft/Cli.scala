@@ -208,7 +208,7 @@ object Cli {
       // COMMITTED delete look failed, and 10M longs need not visit the
       // driver to be counted)
       val dirs = h.snapshot.tombstoneDirs
-      val n = spark.read.parquet(dirs.map(_ + "/ids"): _*)
+      val n = IndexBuilder.readTable[graft.index.TombstoneRow](spark, dirs.map(_ + "/ids"): _*)
         .select(col("docId")).distinct().count()
       println(s"tombstoned; delete set now $n docId(s) — " +
         "hidden from queries immediately, purged at the next `compact`")
@@ -219,22 +219,21 @@ object Cli {
       // actually WRITTEN — tables and streamed segments — and compare to
       // the build-side lineage claims. Exit nonzero on any mismatch.
       val h = IndexBuilder.openHandle(indexDir)
-      import spark.implicits._
       val lin = h.lineage(spark).collect().groupBy(_.stage)
       var bad = 0
       println(f"${"stage"}%-10s ${"lineage"}%12s ${"written"}%12s  status")
       for (stage <- Seq("docmeta", "stats", "postings", "termstats")) {
         val expected = lin.get(stage).map(_.map(_.rows).sum).getOrElse(-1L)
         val actual =
-          try spark.read.parquet(s"${h.root}/$stage").count()
+          try IndexBuilder.stageTable(spark, h.root, stage).count()
           catch { case _: Throwable => -2L }
         val ok = expected == actual
         if (!ok) bad += 1
         println(f"$stage%-10s $expected%12d $actual%12d  ${if (ok) "OK" else "MISMATCH"}")
       }
       for (seg <- h.segmentDirs) {
-        val st = spark.read.parquet(s"$seg/stats").as[graft.index.IndexStats].head()
-        val actual = spark.read.parquet(s"$seg/docmeta").count()
+        val st = IndexBuilder.readStats(spark, Seq(s"$seg/stats")).head
+        val actual = IndexBuilder.readTable[graft.index.DocMeta](spark, s"$seg/docmeta").count()
         val ok = st.n == actual
         if (!ok) bad += 1
         val name = graft.index.Fs.name(seg)

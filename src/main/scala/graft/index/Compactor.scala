@@ -1,5 +1,6 @@
 package graft.index
 
+import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.index.IndexBuilder.{Config, Handle}
@@ -322,16 +323,19 @@ object Compactor {
       // few files per table (the whole point: fewer paths per query); the
       // five tables are independent, so the copies run concurrently (this op
       // rides the 1 s ingest cadence — wall time matters)
-      val copies: Seq[() => Unit] = Seq("docmeta", "blocks", "positions").map(t =>
-        () => spark.read.parquet(segs.map(_ + s"/$t"): _*)
-          .coalesce(4).write.mode("overwrite").parquet(s"$out/$t")) ++ Seq(
-        () => spark.read.parquet(segs.map(_ + "/termstats"): _*)
+      def concat[T <: Product : TypeTag](t: String): () => Unit =
+        () => IndexBuilder.readTable[T](spark, segs.map(_ + s"/$t"): _*)
+          .coalesce(4).write.mode("overwrite").parquet(s"$out/$t")
+      val copies: Seq[() => Unit] = Seq(
+        concat[DocMeta]("docmeta"), concat[PostingBlock]("blocks"),
+        concat[PositionsRow]("positions"),
+        () => IndexBuilder.readTable[TermStat](spark, segs.map(_ + "/termstats"): _*)
           .groupBy($"term")
           .agg(sum($"df").cast("long").as("df"), max($"maxImpact").as("maxImpact"))
           .coalesce(1).sortWithinPartitions($"term")
           .write.mode("overwrite").parquet(s"$out/termstats"),
         () => {
-          val srcStats = IndexBuilder.readStatsCompat(spark, segs.map(_ + "/stats"))
+          val srcStats = IndexBuilder.readStats(spark, segs.map(_ + "/stats"))
           val mergedN = srcStats.map(_.n).sum
           val mergedTok = srcStats.map(_.totalTokens).sum
           // buildAvgdl = min over sources: liveStats' min-aggregation sees the
@@ -468,13 +472,13 @@ object Compactor {
     // row, so the postings/positions folds below drop their rows for free
     // (inner join on oldDocId) — the new epoch equals a fresh build over
     // the SURVIVING corpus and starts with an empty delete set.
-    val union0 = spark.read
-      .parquet((s"$oldRoot/docmeta" +: segs.map(_ + "/docmeta")): _*)
+    val union0 = IndexBuilder.readTable[DocMeta](spark,
+        (s"$oldRoot/docmeta" +: segs.map(_ + "/docmeta")): _*)
       .withColumnRenamed("docId", "oldDocId")
     val union =
       if (state.tombstones.isEmpty) union0
       else union0.join(
-        spark.read.parquet(state.tombstones.map(_ + "/ids"): _*)
+        IndexBuilder.readTable[TombstoneRow](spark, state.tombstones.map(_ + "/ids"): _*)
           .select(col("docId").as("oldDocId")).distinct(),
         Seq("oldDocId"), "left_anti")
     val assigned = IndexBuilder.timedStage("fold-ids")(
@@ -493,10 +497,10 @@ object Compactor {
       // included. Derived from the id-assigned frame directly so the three
       // table folds below have no ordering dependency and run CONCURRENTLY
       // (same overlap pattern as the build and the ingest writes).
-      // lazy: forced first from the postings-fold THREAD, so the sample
-      // job overlaps the docmeta fold instead of serializing before the
-      // concurrent group (same overlap the build's lazy buildAvgdl does);
-      // writeStats reads the already-computed value afterwards
+      // lazy: forced inside the concurrent group (normally by the
+      // postings-fold thread, which needs it first), so the sample job
+      // overlaps the docmeta fold instead of serializing before the group
+      // (same overlap the build's lazy buildAvgdl does)
       lazy val est = IndexBuilder.timedStage("fold-avgdl")(
         IndexBuilder.estimateBuildAvgdl(
           assigned.df.select($"docId", $"dl")))
@@ -530,16 +534,15 @@ object Compactor {
         // mapPartitions closure below would capture the LazyRef and
         // evaluate the sample JOB inside an executor task (SPARK-28702)
         val estV = est
-        val decoded = spark.read
-          .parquet((s"$oldRoot/postings" +: segs.map(_ + "/blocks")): _*)
-          .as[PostingBlock]
+        val decoded = IndexBuilder.readTable[PostingBlock](spark,
+            (s"$oldRoot/postings" +: segs.map(_ + "/blocks")): _*)
           .flatMap { b =>
             val ds = Codec.decodeDeltas(b.docDeltas, b.n, b.firstDocId)
             val tfs = Codec.decodeInts(b.tfs, b.n)
             val dls = Codec.decodeInts(b.dls, b.n)
             Iterator.tabulate(b.n)(i => (b.term, ds(i), tfs(i), dls(i)))
           }.toDF("term", "oldDocId", "tf", "dl")
-        decoded.join(remap, "oldDocId")
+        val blocks = decoded.join(remap, "oldDocId")
           .select($"term",
             least(floor($"docId" * salts / math.max(n, 1L)), lit(salts - 1))
               .cast("int").as("salt"),
@@ -554,7 +557,7 @@ object Compactor {
             b => IndexBuilder.mix3(b.term.hashCode.toLong,
               b.salt.toLong * 31 + b.blockIdx,
               java.util.Arrays.hashCode(b.docDeltas).toLong)))
-          .write.mode("overwrite").parquet(s"$newRoot/postings")
+        IndexBuilder.writePostings(blocks, s"$newRoot/postings")
         IndexBuilder.writeLineageRows(spark, newRoot, "postings", poAcc.value)
       }
 
@@ -564,8 +567,8 @@ object Compactor {
       // stage anyway, so phrase-search capability is unchanged either way).
       val foldPositions = () => IndexBuilder.timedStage("fold-positions")(
         if (Fs.exists(s"$oldRoot/positions")) {
-          spark.read
-            .parquet((s"$oldRoot/positions" +: segs.map(_ + "/positions")): _*)
+          IndexBuilder.readTable[PositionsRow](spark,
+              (s"$oldRoot/positions" +: segs.map(_ + "/positions")): _*)
             .withColumnRenamed("docId", "oldDocId")
             .join(remap, "oldDocId")
             .select($"term", $"docId", $"n", $"posDeltas")
@@ -590,8 +593,8 @@ object Compactor {
         val tot = dmAcc.value.asScala.groupBy(_.partitionId)
           .map(_._2.head.termCount).sum
         val avgdl = tot.toDouble / n.toDouble
-        // lazy `est` is forced by the postings thread first; a concurrent
-        // force here just blocks on the same lazy-val monitor until ready
+        // whichever thread forces the lazy `est` first runs its sample job;
+        // the other blocks on the lazy-val monitor until the value is ready
         val estV = est
         Seq(IndexStats(n, avgdl, tot, estV)).toDS()
           .write.mode("overwrite").parquet(s"$newRoot/stats")
@@ -604,7 +607,7 @@ object Compactor {
         // cached vocab instead of re-running the postings scan + groupBy
         // (same reasoning and identical-output argument as the build's
         // termstats stage)
-        val vocab = spark.read.parquet(s"$newRoot/postings")
+        val vocab = IndexBuilder.readTable[PostingBlock](spark, s"$newRoot/postings")
           .groupBy($"term")
           .agg(sum($"n").cast("long").as("df"), max($"maxImpact").as("maxImpact"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -78,6 +78,9 @@ final case class LineageRow(stage: String, partitionId: Int,
                             docIdMin: Long, docIdMax: Long,
                             termCount: Long, rows: Long, bytes: Long, contentHash: Long)
 
+/** One tombstoned docId (a Compactor.tombstone delete-set row). */
+final case class TombstoneRow(docId: Long)
+
 /** A scored search hit. */
 final case class Hit(docId: Long, score: Double)
 

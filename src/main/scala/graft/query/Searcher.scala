@@ -13,11 +13,16 @@ import graft.index.IndexBuilder.Snapshot
   * Why this scales: salts are disjoint docId ranges, so each group is a
   * self-contained sub-index — per-group top-k results are globally mergeable
   * without re-scoring, and the shuffle moving posting blocks to groups only
-  * moves the query terms' blocks (the `term isin` filter is pushed to the
-  * parquet scan, which prunes row groups via min/max stats on the sorted
-  * `term` column). At 1000 executors this is: k small broadcasts + one
-  * pruned scan + S-way parallel WAND + a k·S-row merge on the driver side
-  * of a TakeOrderedAndProject.
+  * moves the query terms' blocks. What prunes: the `term isin` filter is
+  * pushed to the parquet scan, which skips every row group whose min/max
+  * `term` range holds no query term. Each postings file is term-sorted and
+  * written in row groups of ~`IndexBuilder.PostingsRowGroupBytes` (1 MiB),
+  * so a term costs about one row group per file; whole files are not
+  * skipped (each holds a hash slice of the vocabulary). Tables are read with
+  * their encoder's schema (`IndexBuilder.readTable`), so no schema-inference
+  * job precedes the scan: a cold coordinator probe is one Spark job. At 1000
+  * executors this is: k small broadcasts + one pruned scan + S-way parallel
+  * WAND + a k·S-row merge on the driver side of a TakeOrderedAndProject.
   */
 object Searcher {
 

@@ -262,7 +262,7 @@ object StreamingIngest {
           .mapPartitions(perPartitionTally[DocMeta, Long](dlAcc, 0L)((s, m) => s + m.dl))
           .write.mode("overwrite").parquet(s"$segDir/docmeta"),
         // posting blocks, per-term (df, maxImpact) tallied in-flight
-        () => withIds
+        () => IndexBuilder.writePostings(withIds
           .select($"docId", $"salt", tokenStats.as("ts"))
           .select($"docId", $"salt", $"ts.dl".as("dl"), explode($"ts.tfs").as("tt"))
           .select($"tt.term".as("term"), $"salt", $"docId",
@@ -280,8 +280,7 @@ object StreamingIngest {
                 "-Dgraft.ingest.maxTermsPerPartition")
             val (df0, mi0) = m.getOrElse(b.term, (0L, 0.0))
             m.updated(b.term, (df0 + b.n, math.max(mi0, b.maxImpact)))
-          })
-          .write.mode("overwrite").parquet(s"$segDir/blocks"),
+          }), s"$segDir/blocks"),
         // positional postings — phrase search over the live union must see
         // streamed docs too (the batch positions stage is an explicit build;
         // per-batch occurrence volume is small, so segments carry positions

@@ -172,6 +172,44 @@ class CompactionSpec extends AnyFunSuite with SparkSuite {
     assert(ex.getMessage.contains("folded"))
   }
 
+  test("pre-v3 stats (no buildAvgdl) mixed with v3: liveStats and minor merge agree, buildAvgdl = avgdl per v2 row") {
+    import spark.implicits._
+    val all = (0 until 60).map(i => Corpus.synthDoc(i, 41L))
+    val idx = tmpDir("graft-v2stats-idx")
+    val h = IndexBuilder.build(spark, all.take(30).toDS(), idx, IndexBuilder.Config(salts = 4))
+    val avgdl = h.stats(spark).avgdl
+    // batch=1 appends with a buildAvgdl far below every avgdl, so it is the
+    // v3 row that sets the minimum — a v2 rule leaking onto it would show
+    StreamingIngest.appendSegment(spark, all.slice(30, 45).toDS(), 0L, idx, avgdl, 4, 1L << 40)
+    StreamingIngest.appendSegment(spark, all.slice(45, 60).toDS(), 1L, idx, avgdl / 4, 4, 1L << 40)
+    val Seq(v2Seg, v3Seg) = h.segmentDirs.sorted
+    // rewrite batch=0's stats the way a v2 build wrote them: no buildAvgdl
+    val v2 = IndexBuilder.readStats(spark, Seq(s"$v2Seg/stats")).head
+    Seq((v2.n, v2.avgdl, v2.totalTokens)).toDF("n", "avgdl", "totalTokens")
+      .write.mode("overwrite").parquet(s"$v2Seg/stats")
+    val base = h.stats(spark)
+    val v3 = IndexBuilder.readStats(spark, Seq(s"$v3Seg/stats")).head
+    assert(v3.buildAvgdl == avgdl / 4 && v3.buildAvgdl != v3.avgdl)
+    // one multi-path read keeps each row's own meaning
+    val mixed = IndexBuilder.readStats(spark,
+      Seq(s"${h.root}/stats", s"$v2Seg/stats", s"$v3Seg/stats"))
+    assert(mixed.toSet == Set(base, v2.copy(buildAvgdl = v2.avgdl), v3))
+
+    val n = base.n + v2.n + v3.n
+    val tok = base.totalTokens + v2.totalTokens + v3.totalTokens
+    val minBuild = Seq(base.buildAvgdl, v2.avgdl, v3.buildAvgdl).min
+    val want = (graft.index.IndexStats(n, tok.toDouble / n, tok, minBuild),
+      math.max(1.0, (tok.toDouble / n) / minBuild))
+    assert(h.liveStats(spark) == want)
+    val beforeHits = queries.map(q => q -> byCommit(h, q)).toMap
+
+    val hm = Compactor.mergeSegments(spark, idx)
+    assert(hm.segmentDirs.size == 1)
+    assert(hm.liveStats(spark) == want, "minor merge changed live stats over mixed v2/v3 stats")
+    for (q <- queries)
+      assert(byCommit(hm, q) == beforeHits(q), s"results changed across minor merge for '$q'")
+  }
+
   test("ingest stream with mergeAtSegments keeps the live segment count bounded") {
     import spark.implicits._
     val src = tmpDir("graft-automerge-src")

@@ -276,12 +276,83 @@ class EngineSpec extends AnyFunSuite with SparkSuite {
       "a query materialized a persistent RDD — full-index residency is conf-gated opt-in only")
     // warm identical query: blocks + df are memoized driver-side, so no scan
     // jobs run (the only possible job is the LocalRelation materialization)
-    spark.sparkContext.setJobGroup("graft-warm-q", "warm query", interruptOnCancel = false)
-    Searcher.topK(spark, h2, "sparkSession read", 10).collect()
-    spark.sparkContext.clearJobGroup()
-    Thread.sleep(300) // status tracker is fed asynchronously
-    val warmJobs = spark.sparkContext.statusTracker.getJobIdsForGroup("graft-warm-q").length
+    val warmJobs = jobsIn("graft-warm-q") {
+      Searcher.topK(spark, h2, "sparkSession read", 10).collect()
+    }.size
     assert(warmJobs <= 1, s"warm query ran $warmJobs jobs — term cache not effective")
+  }
+
+  /** Runs `f` under a fresh job group; returns the group's jobs, each as the
+    * names of its stages (a stage is named by its call site, e.g.
+    * "collect at Searcher.scala:130").
+    */
+  private def jobsIn(group: String)(f: => Unit): Seq[Seq[String]] = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group, interruptOnCancel = false)
+    try f finally sc.clearJobGroup()
+    Thread.sleep(300) // status tracker is fed asynchronously
+    val st = sc.statusTracker
+    st.getJobIdsForGroup(group).toSeq.sorted.map(id =>
+      st.getJobInfo(id).toSeq.flatMap(_.stageIds.toSeq).flatMap(st.getStageInfo).map(_.name))
+  }
+
+  test("cold coordinator topK is ONE Spark job; no schema-inference job; postings row groups hold ordered term ranges") {
+    // one postings file big enough for several ~1 MiB row groups
+    val h = IndexBuilder.build(spark, Corpus.synth(spark, 24000, seed = 7L),
+      tmpDir("graft-cold-idx"), IndexBuilder.Config(salts = 4, partitions = 1))
+    val files = graft.index.Fs.listFiles(s"${h.root}/postings").filter(_.endsWith(".parquet"))
+    assert(files.size == 1, files)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(files.head), conf))
+    val ranges = try {
+      import scala.jdk.CollectionConverters._
+      reader.getFooter.getBlocks.asScala.toSeq.map { rg =>
+        val st = rg.getColumns.asScala.find(_.getPath.toDotString == "term").get.getStatistics
+        (st.genericGetMin.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8,
+          st.genericGetMax.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8)
+      }
+    } finally reader.close()
+    assert(ranges.size >= 2, s"postings file is ${ranges.size} row group(s) — term stats prune nothing")
+    ranges.sliding(2).foreach { case Seq((lo, hi), (nextLo, _)) =>
+      assert(lo <= hi && hi <= nextLo, s"row-group term ranges overlap or are unordered: $ranges")
+    }
+
+    def inference(jobs: Seq[Seq[String]]) = jobs.filter(_.exists(_.startsWith("parquet at ")))
+    // first query on the fresh index: the live-stats read + the block probe
+    val first = jobsIn("graft-first-q") { Searcher.topK(spark, h, "parser lexer", 10).collect() }
+    assert(inference(first).isEmpty, s"schema-inference job(s) ran: $first")
+    assert(first.size == 2, s"first query ran ${first.size} jobs: $first")
+    // stats cached, terms cold: exactly the one pruned probe job
+    val cold = jobsIn("graft-cold-q") { Searcher.topK(spark, h, "sparksession readparquet", 10).collect() }
+    assert(cold.size == 1, s"cold coordinator query ran ${cold.size} jobs: $cold")
+    // the distributed path reads termstats and postings without inference
+    val dist = jobsIn("graft-dist-q") {
+      Searcher.topK(spark, h, "baz qux", 10, driverPathMaxPostings = 0L).collect()
+    }
+    assert(dist.nonEmpty && inference(dist).isEmpty, s"schema-inference job(s) ran: $dist")
+  }
+
+  test("an index table missing a column its encoder needs fails loudly, never scores with nulls") {
+    val h = IndexBuilder.build(spark, corpus, tmpDir("graft-nomax-idx"),
+      IndexBuilder.Config(salts = 4, mode = Analyzer.Code))
+    val po = s"${h.root}/postings"
+    val stripped = s"${h.root}/postings-stripped"
+    h.postings(spark).drop("maxImpact").write.parquet(stripped)
+    graft.index.Fs.delete(po)
+    assert(graft.index.Fs.tryRename(stripped, po))
+    def failure(f: => Unit): String = {
+      val e = intercept[Exception](f)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString("\n")
+    }
+    for (msg <- Seq(
+        failure(h.postings(spark).collect()),
+        failure(Searcher.topK(spark, h, "sparkSession read", 10).collect()),
+        failure(Searcher.topK(spark, h, "sparkSession read", 10,
+          driverPathMaxPostings = 0L).collect())))
+      assert(msg.contains("maxImpact"), msg)
   }
 
   test("searchAgg's exhaustive composed plan carries NO global sort (no range exchange)") {
